@@ -55,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from typing import Callable
 
 CHECKPOINT_EVERY = 64
 
@@ -235,11 +236,17 @@ class FileLog:
     """Live-file tracking for one lineage table. Cheap to construct;
     all state lives on disk + a per-instance replay cache."""
 
-    def __init__(self, table_path: str):
+    def __init__(self, table_path: str, on_foreign: Callable[[], None] | None = None):
         self.table_path = table_path
         self.root = os.path.join(table_path, "_filelog")
         self._cache_idx = -1
         self._cache: dict[str, dict[str, dict]] = {}
+        # Every log index <= _known is reflected in this handle: read
+        # by a refresh, or written by this handle right after an index
+        # it knew. A refresh that reads commits past it (made through
+        # another handle) calls ``on_foreign``.
+        self._known = -1
+        self._on_foreign = on_foreign
 
     # -- presence -----------------------------------------------------
     def exists(self) -> bool:
@@ -278,6 +285,7 @@ class FileLog:
                 os.path.join(self.root, f"{idx:0{_LOG_W}d}.json"),
                 {"actions": actions},
             )
+            self._note_written(idx)
             # Checkpoint: bound replay length AND metadata-file count.
             if len(idxs) + 1 >= CHECKPOINT_EVERY:
                 self._refresh_locked()
@@ -304,6 +312,7 @@ class FileLog:
                 )
             except FileExistsError:
                 continue
+            self._note_written(idx)
             if len(idxs) + 1 >= CHECKPOINT_EVERY:
                 # Checkpoint from an explicit replay pinned at OUR idx:
                 # a concurrent commit at idx+1 must not leak into a
@@ -322,6 +331,10 @@ class FileLog:
         raise RuntimeError(
             "put-if-absent log commit failed 512 consecutive index races"
         )
+
+    def _note_written(self, idx: int) -> None:
+        if idx == self._known + 1:
+            self._known = idx
 
     def _cleanup_covered(self, prev_ck: int | None, covered: list[int]) -> None:
         """Delete per-commit files folded into a just-written
@@ -498,11 +511,24 @@ class FileLog:
                     self._cache_idx = i
             except FileNotFoundError:
                 continue
+            if self._cache_idx > self._known:
+                self._known = self._cache_idx
+                if self._on_foreign is not None:
+                    self._on_foreign()
             return
         raise RuntimeError(
             "file log refresh lost 64 consecutive races against "
             "checkpoint cleanup"
         )
+
+    def moved(self) -> bool:
+        """Whether the log holds a commit this handle has neither read
+        nor written — one directory listing, no file read. True when
+        the log was never initialized (scans then list directories)."""
+        if not self.exists():
+            return True
+        ck, idxs = self._scan_log_dir()
+        return max([-1 if ck is None else ck, *idxs]) > self._known
 
     def live(self, tag: str) -> list[dict] | None:
         """Live entries for a directory tag, or None when the log was

@@ -50,6 +50,7 @@ import json
 import logging
 import os
 import shutil
+import threading
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -381,9 +382,23 @@ class LineageTable:
         self._pending_tail: list[tuple] = []
         self._open_batch: int | None = None
         self._batch_counter = 0
+        # In-memory change counter: bumped by every buffered append,
+        # every manifest publish (each commit reserves its batch that
+        # way, and schema changes, compaction and vacuum publish one),
+        # refresh(), the commits that publish through the file log
+        # alone, and each file-log read that brings in another handle's
+        # commits. A flush that succeeds changes no answer and leaves
+        # it. A driver-side cache (Query's record directory) detects
+        # staleness with one integer compare, no file I/O.
+        self.change_count = 0
+        # Serializes the Query facade's writes (table append through
+        # the directory update) with directory loads, version-chain
+        # loads and range aggregates read from the directory, across
+        # every Query and thread on this handle.
+        self._facade_lock = threading.RLock()
         # file-level manifest log (filelog.py): live-file sets + per-
         # file stats so scans plan without directory listing
-        self.filelog = FileLog(path)
+        self.filelog = FileLog(path, on_foreign=self._changed)
 
     @property
     def _stat_cols(self) -> list[str]:
@@ -538,6 +553,10 @@ class LineageTable:
                     )
             self.manifest.commit_seq += 1
             _atomic_write_json(mpath, self.manifest.to_dict())
+        self._changed()
+
+    def _changed(self) -> None:
+        self.change_count += 1
 
     def refresh(self) -> None:
         """Reload the manifest from disk after a ConcurrentWriteError
@@ -551,6 +570,7 @@ class LineageTable:
         self.user_cols = [f.name for f in self.schema.fields]
         self._open_batch = None
         self._batch_counter = 0
+        self._changed()
 
     def rebase_retry(self, op, max_attempts: int = 8):
         """Run an APPEND-SHAPED write op with bounded optimistic-
@@ -1046,6 +1066,7 @@ class LineageTable:
             rid = self._next_local_id()
             rids.append(rid)
             self._pending_base.append((rid, now, *row))
+        self._changed()
         self._maybe_flush()
         return rids
 
@@ -1059,6 +1080,7 @@ class LineageTable:
             seq = self._next_local_id()
             seqs.append(seq)
             self._pending_tail.append((rid, seq, op, now, *values))
+        self._changed()
         self._maybe_flush()
         return seqs
 
@@ -1588,11 +1610,13 @@ class LineageTable:
                 if bad:
                     # abort the whole buffered batch — nothing publishes
                     self._pending_base = []
+                    self._changed()
                     raise CheckViolation(f"check constraint(s) violated: {bad}")
             try:
                 self._validate_unique_inserts(df)
             except UniqueViolation:
                 self._pending_base = []
+                self._changed()
                 raise
             it = self._append_via_staging(
                 df.coalesce(1),
@@ -1614,11 +1638,13 @@ class LineageTable:
                 }
                 if bad:
                     self._pending_tail = []
+                    self._changed()
                     raise CheckViolation(f"check constraint(s) violated: {bad}")
                 try:
                     self._validate_folded_updates(df)
                 except CheckViolation:
                     self._pending_tail = []
+                    self._changed()
                     raise
             # staged like every other commit (was a direct
             # mode("append") before the file log existed: staging is
@@ -1902,6 +1928,31 @@ class LineageTable:
             out = out.select(*self.user_cols)
         return out
 
+    def _history_sources(
+        self, prune: dict, tail_prune: dict, include_pending: bool = True
+    ) -> tuple[DataFrame, DataFrame]:
+        """(base, tail) that version history folds over: the original
+        base and the full tail, or after :meth:`vacuum_tail` the
+        compacted snapshot plus the fresh base, and the tail past TPS.
+        ``prune`` / ``tail_prune`` are file-skipping bounds only; the
+        caller applies the row filters they stand for."""
+        m = self.manifest
+        if m.extra.get("history_floor") is not None and m.compact_version >= 0:
+            snap = self._read_or_empty(
+                self.compacted_dir(), self.base_schema, prune=prune or None
+            )
+            fresh = self.base_df(
+                include_pending, prune={RID: (m.compact_rid_hi + 1, None), **prune}
+            ).where(F.col(RID) > m.compact_rid_hi)
+            tail = self.tail_df(
+                include_pending, prune={SEQ: (m.tps + 1, None), **tail_prune}
+            ).where(F.col(SEQ) > m.tps)
+            return snap.unionByName(fresh), tail
+        return (
+            self.base_df(include_pending, prune=prune or None),
+            self.tail_df(include_pending, prune=tail_prune or None),
+        )
+
     def version_view(
         self,
         relative_version: int = 0,
@@ -1938,22 +1989,7 @@ class LineageTable:
         if key_range is not None:
             kp = self._phys_map.get(self.key, self.key)
             kb = {kp: (key_range[0], key_range[1])}
-        tail_kb = kb if self.tail_keyed else {}
-        vacuumed = self.manifest.extra.get("history_floor") is not None
-        if vacuumed and self.manifest.compact_version >= 0:
-            snap = self._read_or_empty(
-                self.compacted_dir(), self.base_schema, prune=kb or None
-            )
-            fresh = self.base_df(
-                prune={RID: (self.manifest.compact_rid_hi + 1, None), **kb}
-            ).where(F.col(RID) > self.manifest.compact_rid_hi)
-            base = snap.unionByName(fresh)
-            tail = self.tail_df(
-                prune={SEQ: (self.manifest.tps + 1, None), **tail_kb}
-            ).where(F.col(SEQ) > self.manifest.tps)
-        else:
-            base = self.base_df(prune=kb or None)
-            tail = self.tail_df(prune=tail_kb or None)
+        base, tail = self._history_sources(kb, kb if self.tail_keyed else {})
         if key_range is not None:
             lo, hi = key_range
             kc = F.col(self.key)
@@ -2160,6 +2196,20 @@ class LineageTable:
         (ids are ``(batch << 48) | n`` and each commit consumes a fresh
         batch). Pass to :meth:`changes_between` as the resume point."""
         return (self.manifest.next_batch << _BATCH_SHIFT) - 1
+
+    def live_row_bound(self) -> int | None:
+        """Metadata-only upper bound on the current view's row count:
+        the logged row counts of the snapshot and base files it reads
+        plus the unflushed inserts (tombstones only lower the true
+        count). None when the table has no file log or a file has no
+        logged count."""
+        if not self.filelog.exists():
+            return None
+        snap, fresh = self._live_base_entries()
+        rows = [e.get("rows") for e in snap + fresh]
+        if None in rows:
+            return None
+        return sum(rows) + len(self._pending_base)
 
     def fast_count(self) -> DataFrame:
         """Metadata-only COUNT(*) of the current view (the Delta-Lake
@@ -4404,6 +4454,7 @@ class LineageTable:
         marker = os.path.join(self.path, f"_drop_commit_{drop_id}.json")
         _atomic_write_json(marker, {"actions": actions, "moves": moves})
         self.filelog.append(actions)  # <- the commit point
+        self._changed()
         for src_rel, dst_rel in moves:
             src = os.path.join(self.path, src_rel)
             if os.path.exists(src):
@@ -4549,6 +4600,7 @@ class LineageTable:
                     e["_idx"] = prior.get(e["path"])
                 actions.append({"op": "reset", "dir": tag, "files": files})
             self.filelog.append(actions)
+        self._changed()
         return {"rolled_forward": fwd, "discarded": disc, "staging": stag}
 
     def _compact_incremental(self, out_dir: str) -> None:

@@ -23,22 +23,46 @@ Architecture split (SURVEY §1.5, §7.4):
   — sub-ms point OLTP comes from the directory, while correctness is
   anchored in Spark (tests assert directory ≡ current_view after
   arbitrary operation interleavings).
-- **Analytical operations** (sum / sum_version / avg / min / max /
-  count / order_by and every bulk variant) run as Spark DataFrame
-  queries over the lineage views — NOT the reference's driver-side
-  key-at-a-time loops (query.py:200-204), which are O(range) RPCs and
-  the single biggest scale defect in the reference. A range aggregate
-  here is one scan with the predicate pushed to Parquet.
+- **Range aggregates** (sum / sum_version / avg / min / max / count /
+  percentile) follow one dispatch rule. When the directory is resident
+  and fresh (loaded by an earlier point op, nothing changed since, and
+  the table's file log holds no commit of another handle) and the key
+  and aggregate columns are integral — the reference's whole data
+  model — they answer from the directory: ``Index.locate_range`` finds
+  the rids in the key range and the driver folds their values, with no
+  Spark job. ``sum_version`` reads cached version chains, loading the
+  missing ones in one pruned scan. Otherwise (directory never loaded,
+  over its cap or stale, non-integral columns, non-integer bounds, or
+  a sum that could overflow int64) the aggregate runs as ONE Spark
+  scan with the key predicate pushed to Parquet — never the
+  reference's key-at-a-time loop (query.py:200-204). An aggregate never
+  reloads a stale directory; the next point op does. Both paths give
+  the same answer; the tests compare them.
+- **order_by** and the DataFrame variants always run on Spark.
+
+Freshness: ``LineageTable.change_count`` moves on every buffered
+append, commit, schema change and refresh of the handle, and whenever
+a file-log read brings in another handle's commits. The Query records
+it after its own writes (under the table's facade lock, which also
+serializes directory loads), and a point op that finds it moved
+reloads the directory and drops the cached chains: one integer
+compare, no file I/O. A range aggregate also lists the file-log
+directory once, so, as on the Spark path, it sees commits made through
+another handle or process; point ops see them after the next
+``refresh()`` or file-log read.
 """
 
 from __future__ import annotations
 
+import math
+from operator import itemgetter
 from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .lineage import OP_DELETE, OP_UPDATE, RID, LineageTable
+from .lineage import OP, OP_DELETE, OP_UPDATE, RID, SEQ, LineageTable
 
 
 class Record:
@@ -73,18 +97,33 @@ class Index:
     point-op path; at scale the same role is played by Parquet
     min/max + dictionary pushdown on the Spark path (SURVEY §2.2)."""
 
-    def __init__(self, num_columns: int):
+    def __init__(self, num_columns: int, integral: frozenset[int] = frozenset()):
         self.indices: list[dict[Any, list[int]]] = [dict() for _ in range(num_columns)]
+        self.integral = integral  # columns whose values are all ints
 
     # I1 (index.py:17-18)
     def locate(self, column: int, value: Any) -> list[int]:
         return list(self.indices[column].get(value, []))
 
-    # I4 (index.py:42-53) — reference iterates the dense int domain; we
-    # iterate the index's actual keys so any ordered type works.
+    # I4 (index.py:42-53). On an integral column, integer bounds that
+    # span fewer values than the column has distinct values probe the
+    # dense domain, as the reference does; otherwise scan the distinct
+    # values, which works for any ordered type.
     def locate_range(self, begin: Any, end: Any, column: int) -> list[int]:
+        idx = self.indices[column]
         out: list[int] = []
-        for value, rids in self.indices[column].items():
+        if (
+            column in self.integral
+            and type(begin) is int
+            and type(end) is int
+            and end - begin < len(idx)
+        ):
+            for value in range(begin, end + 1):
+                rids = idx.get(value)
+                if rids:
+                    out.extend(rids)
+            return out
+        for value, rids in idx.items():
             if value is not None and begin <= value <= end:
                 out.extend(rids)
         return out
@@ -126,6 +165,13 @@ _FIXED_WIDTHS = {
     "float": 4, "boolean": 1, "date": 4, "timestamp": 8,
     "timestamp_ntz": 8,
 }
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+# A driver-side sum is exact and order-independent when the sum of
+# absolute values stays below these: int64 for sum (Spark's ANSI sum
+# fails on any overflowing partial sum, so anything larger goes to
+# Spark), 2**53 for avg (Spark accumulates avg in a double).
+_SUM_ABS_CAP = 1 << 63
+_AVG_ABS_CAP = 1 << 53
 
 
 def _estimated_row_width(table: LineageTable) -> int:
@@ -151,11 +197,15 @@ class Query:
         self.cols = table.user_cols
         self.ncols = len(self.cols)
         self.key_idx = self.cols.index(table.key)
+        self._integral = frozenset(
+            i
+            for i, c in enumerate(self.cols)
+            if isinstance(table.schema[c].dataType, _INTEGRAL)
+        )
         self.directory: dict[int, Record] = {}
         self.history: dict[int, list[list]] = {}  # rid -> version column-lists, oldest first
-        self.index = Index(self.ncols)
-        self._directory_loaded = False
-        self._dir_dirty_since_ingest = False
+        self.index = Index(self.ncols, self._integral)
+        self._seen = -1  # table.change_count the directory reflects; -1: none
         # no-wait record locks (reference table.py:41,57-70)
         self.locks: dict[Any, int] = {}
         self._txn: "object | None" = None  # set by Transaction.run
@@ -163,66 +213,126 @@ class Query:
     # ------------------------------------------------------------------
     # directory cache maintenance
     # ------------------------------------------------------------------
+    def _fresh(self) -> bool:
+        return self._seen == self.table.change_count
+
+    def _wrote(self) -> None:
+        """Record that the directory reflects the table after one of
+        this Query's own writes."""
+        self._seen = self.table.change_count
+
     def _ensure_directory(self) -> None:
-        """Rebuild the driver-side directory from the lineage views
-        (used after Database.get_table on a persisted or bulk-ingested
-        table). ONE Spark job collecting the current view — version
-        chains are NOT materialized here; ``_history_for`` rebuilds
-        them lazily per rid on first ``select_version`` touch, so
-        directory load is O(live rows), not O(all versions of all
-        rows)."""
-        if self._directory_loaded:
-            return
-        n = self.table.current_view().count()
+        """Load the driver-side directory on first use, and reload it
+        (dropping cached version chains) whenever the table changed
+        through anything but this Query."""
+        if self._seen != self.table.change_count:
+            with self.table._facade_lock:  # a write in flight ends first
+                if not self._fresh():
+                    self._load_directory()
+
+    def _load_directory(self) -> None:
+        """Rebuild the directory from the current view: ONE Spark job
+        collecting it. The size guard bounds the row count from the
+        file log's per-file row counts plus unflushed inserts (no
+        job); only a bound over the cap, or a table without a file
+        log, pays for an exact count. Version chains are NOT
+        materialized here; ``_load_histories`` builds them on demand,
+        so a load is O(live rows), not O(all versions)."""
+        self._seen = -1
+        t = self.table
+        width = _estimated_row_width(t)
+        n = t.live_row_bound()
+        if n is None or n > MAX_DIRECTORY_ROWS or n * width > MAX_DIRECTORY_BYTES:
+            n = t.current_view().count()
         if n > MAX_DIRECTORY_ROWS:
             raise RuntimeError(
                 f"table has {n} rows; point-op directory capped at "
                 f"{MAX_DIRECTORY_ROWS} — use the DataFrame API (current_view/bulk_*)"
             )
-        est = n * _estimated_row_width(self.table)
+        est = n * width
         if est > MAX_DIRECTORY_BYTES:
             raise RuntimeError(
                 f"table would collect an estimated {est / 1e9:.1f} GB "
-                f"({n} rows x ~{_estimated_row_width(self.table)} B/row) to the "
+                f"({n} rows x ~{width} B/row) to the "
                 f"driver; point-op directory capped at "
                 f"{MAX_DIRECTORY_BYTES / 1e9:.1f} GB — use the DataFrame API "
                 "(current_view/bulk_*)"
             )
-        cur = self.table.current_view(include_meta=True).collect()
+        cur = t.current_view(include_meta=True).collect()
         self.directory.clear()
         self.history.clear()
-        self.index = Index(self.ncols)
+        self.index = Index(self.ncols, self._integral)
         for row in cur:
             cols = [row[c] for c in self.cols]
             rec = Record(row[RID], cols[self.key_idx], cols)
             self._register(rec)
-        self._directory_loaded = True
+        self._seen = t.change_count
 
-    def _history_for(self, rid: int, rec: Record) -> list[list]:
-        """Version chain (oldest first) for ONE rid, rebuilt on demand
-        from rid-filtered base/tail scans — both prune on ``_rid`` at
-        the Parquet level — and cached. Chains touched by facade
-        mutations while cached are maintained incrementally; absent
-        entries are simply rebuilt here, which also re-reads any tail
-        deltas those mutations appended."""
-        if rid not in self.history:
-            base_rows = self.table.base_df().where(F.col(RID) == rid).limit(1).collect()
-            if not base_rows:
-                return [rec.columns]
-            versions = [[base_rows[0][c] for c in self.cols]]
-            tails = (
-                self.table.tail_df()
-                .where((F.col(RID) == rid) & (F.col("_op") == OP_UPDATE))
-                .orderBy("_seq")
-                .collect()
+    def _load_histories(self, rids: list[int]) -> None:
+        """Cache the version chains (oldest first) of those ``rids``
+        that have none yet. Reads the sources ``version_view`` folds
+        (``LineageTable._history_sources``: the original base and the
+        full tail, or after ``vacuum_tail`` the compacted snapshot, the
+        fresh base and the tail past TPS) as ONE Parquet job over the
+        missing records' rid range and (immutable) key range, which
+        also skips files on their logged ranges; the driver drops the
+        few other records those ranges hold, such as deleted ones. The
+        unflushed buffers merge on the driver, so no DataFrame is built
+        from them. Deltas apply in ``_seq`` order. Facade mutations
+        keep cached chains current themselves."""
+        missing = [r for r in rids if r not in self.history and r in self.directory]
+        if not missing:
+            return
+        t = self.table
+        want = set(missing)
+        keys = [self.directory[r].key for r in missing]
+        rid_range = (min(missing), max(missing))
+        prune: dict[str, tuple] = {RID: rid_range}
+        in_rids = F.col(RID).between(*rid_range)
+        in_keys = in_rids
+        if None not in keys:
+            key_range = (min(keys), max(keys))
+            prune[t._phys_map.get(t.key, t.key)] = key_range
+            in_keys = in_rids & F.col(t.key).between(*key_range)
+        base, tail = t._history_sources(
+            prune, prune if t.tail_keyed else {RID: rid_range}, include_pending=False
+        )
+        cols = [F.col(c) for c in self.cols]
+        rows = (
+            base.where(in_keys)
+            .select(F.col(RID), F.lit(None).cast("long").alias(SEQ), *cols)
+            .unionByName(
+                tail.where(
+                    (in_keys if t.tail_keyed else in_rids) & (F.col(OP) == OP_UPDATE)
+                ).select(F.col(RID), F.col(SEQ), *cols)
             )
-            for t in tails:
+            .collect()
+        )
+        bases: dict[int, list] = {}
+        deltas: dict[int, list[tuple]] = {r: [] for r in missing}
+        for row in rows:
+            if row[0] not in want:
+                continue
+            if row[1] is None:
+                bases[row[0]] = list(row[2:])
+            else:
+                deltas[row[0]].append((row[1], row[2:]))
+        for r in t._pending_base:  # (rid, ts, *values)
+            if r[0] in want:
+                bases[r[0]] = list(r[2:])
+        for r in t._pending_tail:  # (rid, seq, op, ts, *values)
+            if r[0] in want and r[2] == OP_UPDATE:
+                deltas[r[0]].append((r[1], r[4:]))
+        for rid in missing:
+            if rid not in bases:
+                continue  # no base row: callers fall back to the record
+            versions = [bases[rid]]
+            for _seq, vals in sorted(deltas[rid], key=itemgetter(0)):
                 prev = versions[-1]
                 versions.append(
-                    [t[c] if t[c] is not None else prev[i] for i, c in enumerate(self.cols)]
+                    [v if v is not None else prev[i] for i, v in enumerate(vals)]
                 )
             self.history[rid] = versions
-        return self.history[rid]
 
     def _register(self, rec: Record) -> None:
         self.directory[rec.rid] = rec
@@ -256,16 +366,18 @@ class Query:
     # ------------------------------------------------------------------
     def insert(self, *columns) -> bool:
         try:
-            if len(columns) != self.ncols:
-                return False
-            self._ensure_directory()
-            rid = self.table.insert_rows([tuple(columns)])[0]
-            rec = Record(rid, columns[self.key_idx], list(columns))
-            self._register(rec)
-            self.history[rid] = [list(columns)]
-            if self._txn is not None:
-                self._txn._log_insert(self, rid)
-            return True
+            with self.table._facade_lock:
+                if len(columns) != self.ncols:
+                    return False
+                self._ensure_directory()
+                rid = self.table.insert_rows([tuple(columns)])[0]
+                rec = Record(rid, columns[self.key_idx], list(columns))
+                self._register(rec)
+                self.history[rid] = [list(columns)]
+                self._wrote()
+                if self._txn is not None:
+                    self._txn._log_insert(self, rid)
+                return True
         except Exception:
             return False
 
@@ -291,18 +403,20 @@ class Query:
     # ------------------------------------------------------------------
     def select_version(self, search_key, search_key_index, projected_columns_index, relative_version):
         try:
-            self._ensure_directory()
-            k = abs(int(relative_version))
-            rids = self.index.locate(search_key_index, search_key)
-            out = []
-            for rid in rids:
-                rec = self.directory.get(rid)
-                if rec is None or not rec.is_valid:
-                    continue
-                versions = self._history_for(rid, rec)
-                cols = versions[max(0, len(versions) - 1 - k)]  # clamp to base
-                out.append(Record(rid, rec.key, self._project(cols, projected_columns_index)))
-            return out
+            with self.table._facade_lock:
+                self._ensure_directory()
+                k = abs(int(relative_version))
+                rids = self.index.locate(search_key_index, search_key)
+                self._load_histories(rids)
+                out = []
+                for rid in rids:
+                    rec = self.directory.get(rid)
+                    if rec is None or not rec.is_valid:
+                        continue
+                    versions = self.history.get(rid) or [rec.columns]
+                    cols = versions[max(0, len(versions) - 1 - k)]  # clamp to base
+                    out.append(Record(rid, rec.key, self._project(cols, projected_columns_index)))
+                return out
         except Exception:
             return False
 
@@ -311,68 +425,71 @@ class Query:
     # ------------------------------------------------------------------
     def update(self, primary_key, *columns) -> bool:
         try:
-            if len(columns) != self.ncols:
-                return False
-            self._ensure_directory()
-            if self._locked_by_other(primary_key):
-                return False
-            rids = self.index.locate(self.key_idx, primary_key)
-            if not rids:
-                return False
-            rid = rids[0]  # reference assumes unique pk on update (query.py:144)
-            rec = self.directory[rid]
-            if self._txn is not None:
-                self._txn._log_mutation(self, rid)
-            new_cols = [
-                columns[i] if columns[i] is not None else rec.columns[i]
-                for i in range(self.ncols)
-            ]
-            immutable_idx = {self.key_idx} | {
-                i
-                for i, c in enumerate(self.table.user_cols)
-                if c in self.table.partition_by
-            }
-            if any(new_cols[i] != rec.columns[i] for i in immutable_idx):
-                # Key- or partition-changing update: the lineage
-                # encoding keeps the primary key and partition columns
-                # immutable per rid (that is what lets key predicates
-                # and partition pruning push through the view join to
-                # the Parquet scan — lineage.py _fold_tail), so this
-                # executes as tombstone + reinsert under a fresh rid.
-                # The reference instead swapped index entries in place
-                # (query.py:157-163); observable results are the same.
-                self._unregister(rec)
-                rec.invalidate()
-                self.history.pop(rid, None)
-                self.table.append_tail_rows(
-                    [(rid, OP_DELETE, self._tombstone_vals(rec))]
-                )
-                new_rid = self.table.insert_rows([tuple(new_cols)])[0]
-                new_rec = Record(new_rid, new_cols[self.key_idx], new_cols)
-                self._register(new_rec)
-                self.history[new_rid] = [list(new_cols)]
+            with self.table._facade_lock:
+                if len(columns) != self.ncols:
+                    return False
+                self._ensure_directory()
+                if self._locked_by_other(primary_key):
+                    return False
+                rids = self.index.locate(self.key_idx, primary_key)
+                if not rids:
+                    return False
+                rid = rids[0]  # reference assumes unique pk on update (query.py:144)
+                rec = self.directory[rid]
                 if self._txn is not None:
-                    self._txn._log_insert(self, new_rid)
+                    self._txn._log_mutation(self, rid)
+                new_cols = [
+                    columns[i] if columns[i] is not None else rec.columns[i]
+                    for i in range(self.ncols)
+                ]
+                immutable_idx = {self.key_idx} | {
+                    i
+                    for i, c in enumerate(self.table.user_cols)
+                    if c in self.table.partition_by
+                }
+                if any(new_cols[i] != rec.columns[i] for i in immutable_idx):
+                    # Key- or partition-changing update: the lineage
+                    # encoding keeps the primary key and partition columns
+                    # immutable per rid (that is what lets key predicates
+                    # and partition pruning push through the view join to
+                    # the Parquet scan — lineage.py _fold_tail), so this
+                    # executes as tombstone + reinsert under a fresh rid.
+                    # The reference instead swapped index entries in place
+                    # (query.py:157-163); observable results are the same.
+                    self._unregister(rec)
+                    rec.invalidate()
+                    self.history.pop(rid, None)
+                    self.table.append_tail_rows(
+                        [(rid, OP_DELETE, self._tombstone_vals(rec))]
+                    )
+                    new_rid = self.table.insert_rows([tuple(new_cols)])[0]
+                    new_rec = Record(new_rid, new_cols[self.key_idx], new_cols)
+                    self._register(new_rec)
+                    self.history[new_rid] = [list(new_cols)]
+                    self._wrote()
+                    if self._txn is not None:
+                        self._txn._log_insert(self, new_rid)
+                    return True
+                # index swap per changed column (reference query.py:157-163)
+                for i in range(self.ncols):
+                    if columns[i] is not None and new_cols[i] != rec.columns[i]:
+                        self.index.remove_from_index(i, rec.columns[i], rid)
+                        self.index.add_to_index(i, new_cols[i], rid)
+                rec.columns = new_cols
+                rec.key = new_cols[self.key_idx]
+                if rid in self.history:
+                    # keep a loaded chain current; unloaded chains stay
+                    # absent and _load_histories rebuilds them (including
+                    # this delta) from the tail on first version read
+                    self.history[rid].append(list(new_cols))
+                tail_vals = list(columns)
+                # immutable columns ride in every tail delta AS-IS (their
+                # base values) so tail scans prune on key/partition
+                for i in immutable_idx:
+                    tail_vals[i] = rec.columns[i]
+                self.table.append_tail_rows([(rid, OP_UPDATE, tuple(tail_vals))])
+                self._wrote()
                 return True
-            # index swap per changed column (reference query.py:157-163)
-            for i in range(self.ncols):
-                if columns[i] is not None and new_cols[i] != rec.columns[i]:
-                    self.index.remove_from_index(i, rec.columns[i], rid)
-                    self.index.add_to_index(i, new_cols[i], rid)
-            rec.columns = new_cols
-            rec.key = new_cols[self.key_idx]
-            if rid in self.history:
-                # keep a loaded chain current; unloaded chains stay
-                # absent and _history_for rebuilds them (including this
-                # delta) from the tail on first version read
-                self.history[rid].append(list(new_cols))
-            tail_vals = list(columns)
-            # immutable columns ride in every tail delta AS-IS (their
-            # base values) so tail scans prune on key/partition
-            for i in immutable_idx:
-                tail_vals[i] = rec.columns[i]
-            self.table.append_tail_rows([(rid, OP_UPDATE, tuple(tail_vals))])
-            return True
         except Exception:
             return False
 
@@ -381,25 +498,27 @@ class Query:
     # ------------------------------------------------------------------
     def delete(self, primary_key) -> bool:
         try:
-            self._ensure_directory()
-            if self._locked_by_other(primary_key):
-                return False
-            rids = self.index.locate(self.key_idx, primary_key)
-            if not rids:
-                return False
-            for rid in list(rids):
-                rec = self.directory.get(rid)
-                if rec is None:
-                    continue
-                if self._txn is not None:
-                    self._txn._log_mutation(self, rid)
-                rec.invalidate()
-                self._unregister(rec)
-                self.history.pop(rid, None)
-                self.table.append_tail_rows(
-                    [(rid, OP_DELETE, self._tombstone_vals(rec))]
-                )
-            return True
+            with self.table._facade_lock:
+                self._ensure_directory()
+                if self._locked_by_other(primary_key):
+                    return False
+                rids = self.index.locate(self.key_idx, primary_key)
+                if not rids:
+                    return False
+                for rid in list(rids):
+                    rec = self.directory.get(rid)
+                    if rec is None:
+                        continue
+                    if self._txn is not None:
+                        self._txn._log_mutation(self, rid)
+                    rec.invalidate()
+                    self._unregister(rec)
+                    self.history.pop(rid, None)
+                    self.table.append_tail_rows(
+                        [(rid, OP_DELETE, self._tombstone_vals(rec))]
+                    )
+                    self._wrote()
+                return True
         except Exception:
             return False
 
@@ -408,14 +527,15 @@ class Query:
     # ------------------------------------------------------------------
     def increment(self, key, column) -> bool:
         try:
-            self._ensure_directory()
-            rids = self.index.locate(self.key_idx, key)
-            if not rids:
-                return False
-            rec = self.directory[rids[0]]
-            updated = [None] * self.ncols
-            updated[column] = rec.columns[column] + 1
-            return self.update(key, *updated)
+            with self.table._facade_lock:
+                self._ensure_directory()
+                rids = self.index.locate(self.key_idx, key)
+                if not rids:
+                    return False
+                rec = self.directory[rids[0]]
+                updated = [None] * self.ncols
+                updated[column] = rec.columns[column] + 1
+                return self.update(key, *updated)
         except Exception:
             return False
 
@@ -437,10 +557,55 @@ class Query:
             return False
 
     # ------------------------------------------------------------------
-    # Q6/Q7/Q10-Q13 range aggregates — ONE Spark scan each, predicate
-    # pushed down (vs the reference's key-at-a-time loop, query.py:200)
+    # Q6/Q7/Q10-Q13 range aggregates — from the resident directory when
+    # it can answer, else ONE Spark scan with the predicate pushed down
+    # (never the reference's key-at-a-time loop, query.py:200)
     # ------------------------------------------------------------------
-    def _range_agg(self, start, end, agg_col_idx: int, fn, relative_version: int = 0):
+    def _resident_values(self, start, end, col_idx: int, relative_version: int = 0):
+        """The values of column ``col_idx`` (NULLs included) over the
+        live records whose key lies in [start, end], read from the
+        directory — or None when the directory cannot answer exactly
+        and the Spark path must."""
+        if not (
+            type(start) is int
+            and type(end) is int
+            and self.key_idx in self._integral
+            and col_idx in self._integral
+        ):
+            return None
+        with self.table._facade_lock:
+            # A stale directory is left for the next point op to
+            # reload: this aggregate runs one Spark scan instead. So
+            # does one after a commit through another handle, which
+            # only the file log shows.
+            if not self._fresh() or self.table.filelog.moved():
+                return None
+            rids = self.index.locate_range(start, end, self.key_idx)
+            k = abs(int(relative_version))
+            if k == 0:
+                vals = [self.directory[r].columns[col_idx] for r in rids]
+            else:
+                self._load_histories(rids)
+                vals = []
+                for r in rids:
+                    vs = self.history.get(r) or [self.directory[r].columns]
+                    vals.append(vs[max(0, len(vs) - 1 - k)][col_idx])
+        if any(v is not None and type(v) is not int for v in vals):
+            return None
+        return vals
+
+    def _range_agg(self, start, end, agg_col_idx: int, fn, reduce, relative_version: int = 0):
+        vals = self._resident_values(start, end, agg_col_idx, relative_version)
+        if vals is not None:
+            if not vals:
+                return False  # contract: False when no record in range (query.py:195)
+            present = [v for v in vals if v is not None]
+            if not present:
+                return None
+            try:
+                return reduce(present)
+            except OverflowError:
+                pass  # Spark's own overflow semantics decide
         # key_range both file-skips (manifest-log per-file key min/max,
         # lineage.py current_view) and applies the row filter — the
         # range scan opens only files that can contain [start, end]
@@ -461,33 +626,37 @@ class Query:
 
     def sum(self, start_range, end_range, aggregate_column_index):
         try:
-            return self._range_agg(start_range, end_range, aggregate_column_index, F.sum)
+            return self._range_agg(
+                start_range, end_range, aggregate_column_index, F.sum, _sum
+            )
         except Exception:
             return False
 
     def sum_version(self, start_range, end_range, aggregate_column_index, relative_version):
         try:
             return self._range_agg(
-                start_range, end_range, aggregate_column_index, F.sum, relative_version
+                start_range, end_range, aggregate_column_index, F.sum, _sum, relative_version
             )
         except Exception:
             return False
 
     def avg(self, start_range, end_range, aggregate_column_index):
         try:
-            return self._range_agg(start_range, end_range, aggregate_column_index, F.avg)
+            return self._range_agg(
+                start_range, end_range, aggregate_column_index, F.avg, _avg
+            )
         except Exception:
             return False
 
     def min(self, start_range, end_range, aggregate_column_index):
         try:
-            return self._range_agg(start_range, end_range, aggregate_column_index, F.min)
+            return self._range_agg(start_range, end_range, aggregate_column_index, F.min, min)
         except Exception:
             return False
 
     def max(self, start_range, end_range, aggregate_column_index):
         try:
-            return self._range_agg(start_range, end_range, aggregate_column_index, F.max)
+            return self._range_agg(start_range, end_range, aggregate_column_index, F.max, max)
         except Exception:
             return False
 
@@ -495,15 +664,20 @@ class Query:
         """Beyond-reference: exact interpolated percentile (ANSI
         percentile_cont) over a key range of the current view — the
         quantile member the reference's sum/avg/min/max/count family
-        lacks. Same contract: False when no record is in range. For
+        lacks. Same contract: False when no record is in range, and
+        False for ``q`` outside [0, 1] (Spark rejects it). For
         approximate quantiles over sealed history at scale, see
         operators/quantile.py (mergeable log-histogram sketches)."""
         try:
+            q = float(q)
+            if not 0.0 <= q <= 1.0:
+                return False
             return self._range_agg(
                 start_range,
                 end_range,
                 aggregate_column_index,
-                lambda c: F.percentile(c, F.lit(float(q))),
+                lambda c: F.percentile(c, F.lit(q)),
+                lambda vs: _percentile(vs, q),
             )
         except Exception:
             return False
@@ -511,6 +685,9 @@ class Query:
     def count(self, start_range, end_range, aggregate_column_index):
         # reference counts records; the column arg is unused (query.py:332-343)
         try:
+            keys = self._resident_values(start_range, end_range, self.key_idx)
+            if keys is not None:
+                return len(keys) or False
             view = self.table.current_view(key_range=(start_range, end_range))
             n = view.where(F.col(self.table.key).between(start_range, end_range)).count()
             return False if n == 0 else n
@@ -538,3 +715,31 @@ class Query:
         """Scale path: the sorted view as a DataFrame (no collect)."""
         col = F.col(self.cols[column_index])
         return self.table.current_view().orderBy(col.asc() if ascending else col.desc())
+
+
+# Driver-side reducers for the directory path, each equal to its Spark
+# aggregate over a non-empty list of non-NULL ints. OverflowError hands
+# the call to Spark where the driver cannot reproduce Spark exactly.
+def _sum(vs: list[int]) -> int:
+    if sum(map(abs, vs)) >= _SUM_ABS_CAP:
+        raise OverflowError("int64 sum may overflow")
+    return sum(vs)
+
+
+def _avg(vs: list[int]) -> float:
+    if sum(map(abs, vs)) >= _AVG_ABS_CAP:
+        raise OverflowError("double accumulation may round")
+    return float(sum(vs)) / len(vs)
+
+
+def _percentile(vs: list[int], q: float) -> float:
+    """Spark's ``Percentile`` interpolation: position ``(n-1)*q`` over
+    the sorted values, ``(hi-pos)*lo + (pos-lo_i)*hi`` between the two
+    neighbours, and the value itself when they are equal."""
+    vs = sorted(vs)
+    pos = (len(vs) - 1) * q
+    lo_i, hi_i = math.floor(pos), math.ceil(pos)
+    lo, hi = vs[lo_i], vs[hi_i]
+    if lo_i == hi_i or lo == hi:
+        return float(lo)
+    return (hi_i - pos) * float(lo) + (pos - lo_i) * float(hi)

@@ -17,6 +17,7 @@ writer discipline, documented in SURVEY §1.5's lock-table row).
 
 from __future__ import annotations
 
+import contextlib
 import threading
 
 from .query import Query, Record
@@ -53,7 +54,7 @@ class Transaction:
         rec = q.directory.get(rid)
         # history snapshot is None when the chain was never loaded —
         # restoring [] would poison the lazy per-rid cache with an
-        # empty (wrong) chain; None lets _history_for rebuild it
+        # empty (wrong) chain; None lets _load_histories rebuild it
         hist_snap = (
             [list(v) for v in q.history[rid]] if rid in q.history else None
         )
@@ -97,24 +98,45 @@ class Transaction:
 
     # X3 — real rollback (the reference's TODO)
     def abort(self) -> bool:
-        # 1. truncate un-flushed lineage appends
-        for tid, (nb, nt) in self._marks.items():
-            t = self._tables[tid]
-            del t._pending_base[nb:]
-            del t._pending_tail[nt:]
-        # 2. restore directory/index/history from the undo log, newest first
-        for kind, q, rid, snap in reversed(self._undo):
-            cur = q.directory.get(rid)
-            if cur is not None:
-                q._unregister(cur)
-                q.history.pop(rid, None)
-            if kind == "mut" and snap is not None:
-                rec, hist = snap
-                rec.is_valid = True
-                q._register(rec)
-                if hist is not None:
-                    q.history[rid] = hist
-        self._release()
+        # Undo under the facade lock of every touched table (taken in
+        # one global order): no Query reloads a half-undone directory.
+        with contextlib.ExitStack() as held:
+            for t in sorted(self._tables.values(), key=id):
+                held.enter_context(t._facade_lock)
+            # A Query that was fresh and wrote every undone record of its
+            # table is exact again once both steps below ran; any other
+            # Query on a truncated table reloads its directory.
+            writers: dict[int, set] = {}
+            for _kind, q, _rid, _snap in self._undo:
+                writers.setdefault(id(q.table), set()).add(q)
+            fresh = [
+                q
+                for qs in writers.values()
+                for q in qs
+                if len(qs) == 1 and q._fresh()
+            ]
+            # 1. truncate un-flushed lineage appends
+            for tid, (nb, nt) in self._marks.items():
+                t = self._tables[tid]
+                if len(t._pending_base) > nb or len(t._pending_tail) > nt:
+                    del t._pending_base[nb:]
+                    del t._pending_tail[nt:]
+                    t._changed()
+            # 2. restore directory/index/history from the undo log, newest first
+            for kind, q, rid, snap in reversed(self._undo):
+                cur = q.directory.get(rid)
+                if cur is not None:
+                    q._unregister(cur)
+                    q.history.pop(rid, None)
+                if kind == "mut" and snap is not None:
+                    rec, hist = snap
+                    rec.is_valid = True
+                    q._register(rec)
+                    if hist is not None:
+                        q.history[rid] = hist
+            for q in fresh:
+                q._wrote()
+            self._release()
         return False
 
     def commit(self) -> bool:

@@ -54,6 +54,64 @@ def test_plan_scoped_persist_bounded(spark):
     assert grown <= 5, grown
 
 
+def test_plan_scoped_persist_interleaved_threads_leave_no_stale_cache(spark, monkeypatch):
+    """Two threads persist into ONE slot, interleaved by events (no
+    sleeps): thread A is held inside ``persist`` while thread B reaches
+    the slot lock. B must wait for A, then evict A's frame, so only
+    B's frame stays cached."""
+    import threading
+
+    from lineage_store_database_management_system_spark.operators import _util
+
+    a_in_persist, b_at_lock, release_a = (threading.Event() for _ in range(3))
+
+    class SignalingLock:
+        def __init__(self):
+            self._lock = threading.Lock()
+
+        def __enter__(self):
+            if threading.current_thread().name == "b":
+                b_at_lock.set()
+            self._lock.acquire()
+
+        def __exit__(self, *exc):
+            self._lock.release()
+
+    monkeypatch.setattr(_util, "_PLAN_PERSIST_LOCK", SignalingLock())
+    df_a = spark.range(11).selectExpr("id * 3 AS x")
+    df_b = spark.range(13).selectExpr("id * 5 AS x")
+    cls = type(df_a)
+    real_persist = cls.persist
+
+    def gated_persist(self, *args, **kwargs):
+        if self is df_a:
+            a_in_persist.set()
+            assert release_a.wait(60)
+        return real_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", gated_persist)
+    slot = "interleaved-threads-test"
+    ta = threading.Thread(target=_util.plan_scoped_persist, args=(df_a, slot), name="a")
+    tb = threading.Thread(target=_util.plan_scoped_persist, args=(df_b, slot), name="b")
+    ta.start()
+    assert a_in_persist.wait(60)
+    tb.start()
+    assert b_at_lock.wait(60)
+    release_a.set()
+    ta.join(60)
+    tb.join(60)
+    try:
+        assert not ta.is_alive() and not tb.is_alive()
+        lvl_a, lvl_b = df_a.storageLevel, df_b.storageLevel
+        assert not (lvl_a.useMemory or lvl_a.useDisk)  # superseded: evicted
+        assert lvl_b.useMemory or lvl_b.useDisk
+    finally:
+        df_a.unpersist()
+        df_b.unpersist()
+        for key in [k for k in _util._PLAN_PERSIST_SLOTS if k[1] == slot]:
+            del _util._PLAN_PERSIST_SLOTS[key]
+
+
 def test_version_view_single_window_matches_two_scan_reference(spark, tmp_db):
     src = spark.createDataFrame(
         [(i, float(i)) for i in range(300)], "k int, v double"
